@@ -91,20 +91,13 @@ def main() -> None:
         tdir = f"{workdir}/transcripts"
         synth.transcripts_df(spark, n_convs).write.parquet(tdir)
         transcripts = spark.read.parquet(tdir)
-        from dataclasses import replace as _replace
-
-        # production profile: conversation-local fused decode (no scored-pair
-        # shuffle); equality with the relational reference path is
-        # pytest-gated (tests/test_variants.py)
-        bench_cfg = _replace(DEFAULT_CONFIG, re_decode="grouped",
-                             ner_decode="fused")
         e2e_reps: list[float] = []
         for rep in range(reps):
             # a fresh store per rep: resume would otherwise skip every stage
             store = CheckpointStore(spark, f"{workdir}/ck{rep}",
                                     run_id=f"bench{rep}")
             t0 = time.time()
-            out = run_full_pipeline(spark, transcripts, bench_cfg, store,
+            out = run_full_pipeline(spark, transcripts, DEFAULT_CONFIG, store,
                                     granularity="coarse")
             n_triples = out["triples"].count()
             n_edges = out["edges"].count()

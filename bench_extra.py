@@ -95,8 +95,6 @@ def main() -> None:
         run_graph400k(spark, timings, leg)
 
     elif what == "e2e":
-        from dataclasses import replace as _replace
-
         from pl_marker_spark import synth
         from pl_marker_spark.checkpoint import CheckpointStore
         from pl_marker_spark.config import DEFAULT_CONFIG
@@ -109,11 +107,9 @@ def main() -> None:
             tdir = f"{workdir}/transcripts"
             synth.transcripts_df(spark, n_convs).write.parquet(tdir)
             transcripts = spark.read.parquet(tdir)
-            cfg = _replace(DEFAULT_CONFIG, re_decode="grouped",
-                           ner_decode="fused")
             store = CheckpointStore(spark, f"{workdir}/ck", run_id="bx")
             with leg("kg_pipeline_e2e"):
-                out = run_full_pipeline(spark, transcripts, cfg, store,
+                out = run_full_pipeline(spark, transcripts, DEFAULT_CONFIG, store,
                                         granularity="coarse")
                 n_triples = out["triples"].count()
                 n_edges = out["edges"].count()

@@ -28,24 +28,12 @@ class PipelineConfig:
     eval_softmax: bool = False
     eval_unidirect: bool = False         # ablation: skip bidirectional fusion
                                          # (run_re.py:899-988)
-    ner_decode: str = "staged"           # "staged": spanpack_ner → infer_ner
-                                         # → suppress_mentions with a
-                                         # materialized packed_ner boundary
-                                         # (semantic reference,
-                                         # driver-oracle-gated) | "fused":
-                                         # windowing+enumeration+scoring+O3
-                                         # in one conversation-local grouped
-                                         # map — no packed_ner shuffle or
-                                         # parquet round-trip; surrogate
-                                         # model only (runner falls back to
-                                         # staged otherwise)
-    re_decode: str = "relational"        # "relational": pair_scores table +
-                                         # self-join fusion (semantic
-                                         # reference, driver-oracle-gated) |
-                                         # "grouped": conversation-local
-                                         # fuse+suppress inside the repack
-                                         # cogroup — no pair-table shuffle;
-                                         # the production profile
+    # Retired plan selectors: run_extraction picks its plan from the other
+    # fields (pipeline.runner.single_pass_eligible). The fields stay only
+    # because the benchmark workloads set them; they accept just these
+    # values and are removed in the next benchmark-only change.
+    ner_decode: str = "fused"
+    re_decode: str = "grouped"
     levitated_pairs: bool = False        # C4 all-pairs levitated variant
                                          # (run_levitatedpair.py:282-322):
                                          # both mentions levitated, forward-only
@@ -100,11 +88,19 @@ class PipelineConfig:
     # --- engine knobs (no reference equivalent) ---
     segment_turns: int = 0               # >0: segmented window assembly for
                                          # unbounded conversations (exact; see
-                                         # spanpack.spanpack_ner_segmented)
+                                         # spanpack.spanpack_ner_segmented);
+                                         # runs the general extraction plan
     shuffle_partitions: int = 32
     salt_buckets: int = 8                # skew salting for turn-level grouped maps
     assemble_tensors: bool = False       # build K5 marker tensors inside the inference
                                          # UDF (parity demo; surrogate does not need them)
+
+    def __post_init__(self):
+        if (self.ner_decode, self.re_decode) != ("fused", "grouped"):
+            raise ValueError(
+                "ner_decode/re_decode no longer select a plan; they accept "
+                f"only 'fused'/'grouped', got {self.ner_decode!r}/"
+                f"{self.re_decode!r}")
 
     def needs_spliced_tokens(self) -> bool:
         """Whether RE packing must carry the marker-spliced token stream

@@ -1,23 +1,21 @@
-"""Single-pass extraction: mentions AND triples from ONE pass over the
-conversation — the terminal fusion of the production profile.
+"""Single-pass extraction: mentions AND triples from ONE grouped map per
+conversation — the plan run_extraction picks for every config
+``runner.single_pass_eligible`` accepts, DEFAULT_CONFIG included.
 
-``ner_decode="fused"`` removed the packed_ner table; ``re_decode="grouped"``
-removed the scored-pair table; this stage removes the remaining hop: the
-mentions a conversation produces are consumed by that same conversation's
-RE decode *in-process*, so the extraction writes exactly one table (a
-``kind``-discriminated union of mention and triple rows) and the corpus is
-read exactly once. At 10^12 turns that is the difference between two full
+The mentions a conversation produces are consumed by that same
+conversation's RE decode *in-process*, so there is no packed_ner table, no
+scored-pair table, and the extraction writes exactly one table (a
+``kind``-discriminated union of mention and triple rows) after reading the
+corpus once. At 10^12 turns that is the difference between several full
 passes over the token arrays and one.
 
-Semantics are byte-identical to the staged chain by construction: the NER
-half is ``ner.spanpack_decode_ner``'s kernel (conversation-level word scan
-+ gazetteer pass + per-turn O3) and the RE half is
-``repack.repack_decode_re``'s kernel (`_decode_turn`) fed the same sorted
-per-turn mention lists the parquet roundtrip would deliver —
-equality-tested against both staged paths in test_variants.
-
-Eligibility mirrors the two component profiles (runner enforces):
-surrogate head, unsegmented, no packing-reorder knobs, grouped RE decode.
+Semantics equal the general plan's staged chain (spanpack_ner → infer_ner
+→ suppress_mentions, repack_re → infer_pairs → fuse_and_decode →
+suppress_triples): the NER half is ``ner.iter_fused_ner_conv``
+(conversation-level word scan + gazetteer pass + per-turn O3) and the RE
+half scores and fuses each turn's pairs with ``rel.fuse_suppress_turn``
+over the same sorted per-turn mention lists the staged chain would read.
+Both plans are equality-tested against run_oracle in test_variants.
 """
 
 from __future__ import annotations
@@ -38,6 +36,29 @@ TRIPLE_COLS = ["conv_id", "turn_idx", "s1", "e1", "s2", "e2", "pred",
                "score", "m1_ner", "m2_ner"]
 
 
+def _decode_turn(idx, n: int, win, ments, cfg: PipelineConfig, transform,
+                 use_ner: bool):
+    """One turn's conversation-local RE decode with the surrogate head: pack
+    subject instances, score every (subject, object) pair, then
+    fuse+suppress (O4/O5/O6, rel.fuse_suppress_turn). Returns the kept rows
+    (score, m1, m2, label_idx, m1_ner, m2_ner)."""
+    from ..kernels import subject_instances
+    from ..surrogate import aux_obj_ner, re_logits_for_pair
+    from .rel import fuse_suppress_turn
+
+    pair_scores: dict[tuple, tuple[list[float], str]] = {}
+    for inst in subject_instances(idx, n, win, ments, cfg):
+        sub_surface = " ".join(
+            idx.words[inst.sub_word[0] : inst.sub_word[1] + 1])
+        for _l, _r, olabel, ows, owe in inst.objects:
+            osurf = " ".join(idx.words[ows : owe + 1])
+            v = re_logits_for_pair(sub_surface, osurf)
+            pair_scores[(inst.sub_word, (ows, owe))] = (
+                transform(v) if transform else v,
+                olabel if use_ner else aux_obj_ner(osurf))
+    return fuse_suppress_turn(pair_scores, cfg)
+
+
 def extract_single_pass(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """turns_tok -> kind-discriminated union of mention ('m') and triple
     ('t') rows, one grouped map per conversation."""
@@ -56,7 +77,6 @@ def extract_single_pass(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
         from ..kernels import context_window
         from .ner import iter_fused_ner_conv
-        from .repack import _decode_turn
         from .spanpack import _conv_index_from_rows
 
         def frame(ment_rows, trip_rows, cid=None):
@@ -95,9 +115,7 @@ def extract_single_pass(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
         cid = pdf["conv_id"].iloc[0]
         turn_ids = pdf["turn_idx"].to_numpy()
 
-        # ---- NER half: the SHARED fused kernel (ner.iter_fused_ner_conv),
-        # the same generator spanpack_decode_ner drains — the two routes
-        # cannot diverge (round-3 ADVICE item #1) -----------------------
+        # ---- NER half (ner.iter_fused_ner_conv) -------------------------
         ment_rows: list[tuple] = []          # (tid, si, ei, lab, prob)
         by_turn: dict[int, list[tuple[int, int, str]]] = {}
         for _n, tid, si, ei, li, prob in iter_fused_ner_conv(
@@ -106,7 +124,7 @@ def extract_single_pass(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
             ment_rows.append((tid, si, ei, lab, prob))
             by_turn.setdefault(tid, []).append((si, ei, lab))
 
-        # ---- RE half (== repack.repack_decode_re) -----------------------
+        # ---- RE half (_decode_turn) --------------------------------------
         trip_rows: list[tuple] = []  # (tid, s1, e1, s2, e2, pred, score, n1, n2)
         tid_to_ord = {int(t): n for n, t in enumerate(turn_ids)}
         for tid, ments in sorted(by_turn.items()):
@@ -115,9 +133,10 @@ def extract_single_pass(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
             win = context_window(idx, n, budget_re, truncate=True,
                                  materialize=False)
             trip_rows.extend(
-                (tid, s1, e1, s2, e2, REL_LABELS[pred], float(score), n1, n2)
-                for s1, e1, s2, e2, pred, score, n1, n2 in _decode_turn(
-                    idx, n, win, ments, cfg, transform, False, use_ner))
+                (tid, m1[0], m1[1], m2[0], m2[1], REL_LABELS[pred],
+                 float(score), n1, n2)
+                for score, m1, m2, pred, n1, n2 in _decode_turn(
+                    idx, n, win, ments, cfg, transform, use_ner))
         return frame(ment_rows, trip_rows, cid)
 
     pruned = turns_tok.select(

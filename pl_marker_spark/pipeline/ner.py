@@ -150,10 +150,9 @@ def infer_ner(packed_ner: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def iter_fused_ner_conv(idx, turn_ids, family: str, maxlen: int,
                         overlap_any: bool):
-    """The fused-NER conversation kernel, shared verbatim by
-    ``spanpack_decode_ner`` (staged-free NER profile) and
-    ``extract_fused.extract_single_pass`` (single-pass extraction) so the
-    two routes cannot diverge (round-3 ADVICE item #1).
+    """The NER half of ``extract_fused.extract_single_pass``: C1
+    enumeration + surrogate scoring (O1 NIL filter) + O3 per-turn
+    suppression for one conversation, with no packed_ner table.
 
     One conversation-level word scan + one gazetteer match pass
     (surrogate.conv_word_index / conv_gazetteer_matches) replace the
@@ -219,70 +218,6 @@ def iter_fused_ner_conv(idx, turn_ids, family: str, maxlen: int,
                 continue
             ks.append(si); ke.append(ei); kl.append(li)
             yield n, tid, si, ei, li, float(probs[o])
-
-
-def spanpack_decode_ner(turns_tok: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Fused NER production profile (``ner_decode="fused"``): C1
-    enumeration + surrogate scoring (O1 NIL filter) + O3 per-turn
-    suppression in ONE conversation-local grouped map — the packed_ner
-    table never materializes, so no window strings ride a shuffle or a
-    parquet round-trip. Windows are never even assembled: C1 spans are
-    per-sentence and the surrogate scores surfaces, not context, so one
-    conversation-level word scan + gazetteer pass
-    (surrogate.conv_word_index / conv_gazetteer_matches) replaces the
-    ~9×-overlapping per-window scans of the staged path. The NER twin of
-    ``repack.repack_decode_re``; the staged spanpack_ner → infer_ner →
-    suppress_mentions chain remains the oracle-gated semantic reference
-    and the fused output is equality-tested against it (test_variants).
-
-    Surrogate head only: the packed_linear tensor head batches packed
-    groups ACROSS conversations in the staged path (models.GROUP_CHUNK),
-    which a per-conversation kernel would undo — the runner routes tensor
-    models (and candidate-restricted / reorder-knob configs) to the
-    staged path."""
-    maxlen = cfg.max_mention_ori_length
-    family = cfg.tokenizer_family
-    overlap_any = cfg.overlap_any
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .spanpack import _conv_index_from_rows
-
-        cols = {
-            "conv_id": pd.Series([], dtype="object"),
-            "turn_idx": pd.Series([], dtype="int32"),
-            "start": pd.Series([], dtype="int32"),
-            "end": pd.Series([], dtype="int32"),
-            "label": pd.Series([], dtype="object"),
-            "score": pd.Series([], dtype="float64"),
-        }
-        if pdf.empty:
-            return pd.DataFrame(cols)
-        pdf, idx = _conv_index_from_rows(pdf)
-        cid = pdf["conv_id"].iloc[0]
-        turn_ids = pdf["turn_idx"].to_numpy()
-        out_conv, out_turn = [], []
-        out_s, out_e, out_lab, out_score = [], [], [], []
-        for _n, tid, si, ei, li, prob in iter_fused_ner_conv(
-                idx, turn_ids, family, maxlen, overlap_any):
-            out_conv.append(cid)
-            out_turn.append(tid)
-            out_s.append(si)
-            out_e.append(ei)
-            out_lab.append(NER_LABELS[li])
-            out_score.append(prob)
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series(out_conv, dtype="object"),
-                "turn_idx": pd.Series(out_turn, dtype="int32"),
-                "start": pd.Series(out_s, dtype="int32"),
-                "end": pd.Series(out_e, dtype="int32"),
-                "label": pd.Series(out_lab, dtype="object"),
-                "score": pd.Series(out_score, dtype="float64"),
-            }
-        )
-
-    pruned = turns_tok.select("conv_id", "turn_idx", "subwords", "sw_counts")
-    return pruned.groupBy("conv_id").applyInPandas(run, schema=MENTIONS_SCHEMA)
 
 
 def _overlap_mat(s: np.ndarray, e: np.ndarray) -> np.ndarray:

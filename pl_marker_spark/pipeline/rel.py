@@ -287,17 +287,17 @@ def decode_unidirect(pair_scores: DataFrame, mentions: DataFrame) -> DataFrame:
 
 def fuse_suppress_turn(pair_scores: dict, cfg: PipelineConfig) -> list[tuple]:
     """Conversation-local O4/O5/O6 (run_re.py:783-852) over one turn's
-    insertion-ordered pair dict {(m1, m2): (logits, obj_ner)} — the kernel
-    of the ``re_decode="grouped"`` path. Returns kept rows
-    (score, m1, m2, label_idx, m1_ner, m2_ner) after greedy suppression.
+    insertion-ordered pair dict {(m1, m2): (logits, obj_ner)} — the RE
+    decode of the single-pass plan (extract_fused.extract_single_pass).
+    Returns kept rows (score, m1, m2, label_idx, m1_ner, m2_ner) after
+    greedy suppression.
 
-    Exists alongside the relational fuse_and_decode/suppress_triples pair:
-    the relational form is the semantic reference (self-join + zip_with,
-    oracle-gated by the driver); this form runs where the pairs already
-    live — inside the per-conversation repack group — so the widest
-    intermediate (one row per scored pair) never enters a shuffle or a
-    parquet round-trip. Equality of the two paths (and the oracle) is
-    asserted in tests/test_variants.py."""
+    Exists alongside the relational fuse_and_decode/suppress_triples pair
+    of the general plan (self-join + zip_with over a pair_scores table):
+    this form runs where the pairs already live — inside the
+    per-conversation group — so the widest intermediate (one row per
+    scored pair) never enters a shuffle or a parquet round-trip. Both
+    plans are asserted equal to the oracle in tests/test_variants.py."""
     sent_results = []
     visited = set()
     for k1, (v1, m2_ner) in pair_scores.items():

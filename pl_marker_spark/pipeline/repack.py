@@ -114,178 +114,6 @@ def repack_re(turns_tok: DataFrame, mentions: DataFrame, cfg: PipelineConfig) ->
     )
 
 
-def _decode_turn(idx, n: int, win, ments, cfg: PipelineConfig, transform,
-                 tensor_head: bool, use_ner: bool, word_off: int = 0):
-    """One turn's conversation-local RE decode: pack subject instances,
-    score every (subject, object) pair, then fuse+suppress (O4/O5/O6,
-    rel.fuse_suppress_turn). ``ments`` are index-local word coords;
-    ``word_off`` shifts emitted coords back to conversation level (segmented
-    path). Returns kept rows (s1, e1, s2, e2, label_idx, score, m1, m2)."""
-    from ..world import NER_LABELS
-    from .rel import fuse_suppress_turn
-
-    pair_scores: dict[tuple, tuple[list[float], str]] = {}
-    for inst in subject_instances(idx, n, win, ments, cfg):
-        if tensor_head:
-            from ..kernels import assemble_re_tensors
-
-            if cfg.model == "hf":
-                from ..models import get_hf_adapter
-
-                head = get_hf_adapter(cfg.checkpoint_dir, "re",
-                                      cfg.use_full_layer).re_head_logits
-            else:
-                from ..models import re_head_logits
-
-                def head(*a, _f=cfg.use_full_layer == 0, **k):
-                    return re_head_logits(*a, full_mask=_f, **k)
-
-            ii, pi, att, subpos = assemble_re_tensors(
-                inst.tokens, inst.sub_win,
-                [(o[0], o[1]) for o in inst.objects],
-                cfg.max_seq_length_re, cfg.max_pair_length_re,
-                att_left=cfg.att_left, att_right=cfg.att_right)
-            mat, aux = head(
-                ii, pi, att, subpos, len(inst.objects),
-                cfg.max_seq_length_re)
-        else:
-            from ..surrogate import aux_obj_ner, re_logits_for_pair
-
-            sub_surface = " ".join(
-                idx.words[inst.sub_word[0] : inst.sub_word[1] + 1])
-        for k, (_l, _r, olabel, ows, owe) in enumerate(inst.objects):
-            if tensor_head:
-                v = mat[k].tolist()
-                ner = olabel if use_ner else NER_LABELS[int(aux[k].argmax())]
-            else:
-                osurf = " ".join(idx.words[ows : owe + 1])
-                v = re_logits_for_pair(sub_surface, osurf)
-                ner = olabel if use_ner else aux_obj_ner(osurf)
-            pair_scores[(inst.sub_word, (ows, owe))] = (
-                transform(v) if transform else v, ner)
-    return [
-        (m1[0] + word_off, m1[1] + word_off, m2[0] + word_off,
-         m2[1] + word_off, pred, float(score), n1, n2)
-        for score, m1, m2, pred, n1, n2 in fuse_suppress_turn(pair_scores, cfg)
-    ]
-
-
-def _triples_frame(rows, cols):
-    out = pd.DataFrame(rows, columns=cols)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    for c in ("s1", "e1", "s2", "e2"):
-        out[c] = out[c].astype("int32")
-    return out
-
-
-def repack_decode_re(turns_tok: DataFrame, mentions: DataFrame,
-                     cfg: PipelineConfig) -> DataFrame:
-    """``re_decode="grouped"``: one cogrouped pass from (turns, mentions) to
-    suppressed triples — packing, pair scoring, bidirectional fusion and O6
-    suppression all happen conversation-locally (see rel.fuse_suppress_turn).
-
-    Scale rationale: every pair of a turn is generated inside its
-    conversation group by construction, so the scored-pair table (the
-    pipeline's widest intermediate, ~3 rows per mention² per turn) never
-    needs the fusion self-join shuffle or a checkpoint round-trip. The
-    relational path (repack_re → infer_pairs → fuse_and_decode →
-    suppress_triples) remains the driver-oracle-gated reference."""
-    from ..world import REL_LABELS
-    from .rel import TRIPLES_RAW_SCHEMA, _score_transform
-
-    budget = cfg.budget_re()
-    use_ner = cfg.use_ner_results
-    transform = _score_transform(cfg)
-    tensor_head = cfg.model in ("packed_linear", "hf")
-    need_tokens = cfg.needs_spliced_tokens()
-
-    def run(key, turns_pdf: pd.DataFrame, mentions_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "turn_idx", "s1", "e1", "s2", "e2", "pred",
-                "score", "m1_ner", "m2_ner"]
-        if mentions_pdf.empty or turns_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        turns_pdf, idx = _conv_index_from_rows(turns_pdf)
-        cid = key[0]
-        tid_to_ord = {int(t): n for n, t in enumerate(turns_pdf["turn_idx"])}
-        rows = []
-        for tid, ments in _mentions_by_turn(mentions_pdf):
-            n = tid_to_ord[tid]
-            win = context_window(idx, n, budget, truncate=True,
-                                 materialize=need_tokens)
-            for s1, e1, s2, e2, pred, score, n1, n2 in _decode_turn(
-                idx, n, win, ments, cfg, transform, tensor_head, use_ner
-            ):
-                rows.append((cid, tid, s1, e1, s2, e2,
-                             REL_LABELS[pred], score, n1, n2))
-        return _triples_frame(rows, cols)
-
-    turns_pruned, mentions_pruned = _pruned_repack_inputs(turns_tok, mentions, cfg)
-    return (
-        turns_pruned.groupBy("conv_id")
-        .cogroup(mentions_pruned.groupBy("conv_id"))
-        .applyInPandas(run, schema=TRIPLES_RAW_SCHEMA)
-    )
-
-
-def repack_decode_re_segmented(
-    turns_tok: DataFrame, mentions: DataFrame, cfg: PipelineConfig,
-    seg_turns: int = 64,
-) -> DataFrame:
-    """Segmented grouped decode: the unbounded-conversation path composed
-    with the production conversation-local fuse+suppress. Every pair of a
-    turn is generated inside the turn's center segment (mentions cogroup by
-    center segment; subject instances never cross turns), so the per-turn
-    fuse/suppress semantics are unchanged — output equals the unsegmented
-    grouped (and relational, and oracle) paths exactly
-    (tests/test_segmented.py::test_segmented_grouped_decode)."""
-    from ..world import REL_LABELS
-    from .rel import TRIPLES_RAW_SCHEMA, _score_transform
-
-    budget = cfg.budget_re()
-    use_ner = cfg.use_ner_results
-    transform = _score_transform(cfg)
-    tensor_head = cfg.model in ("packed_linear", "hf")
-    need_tokens = cfg.needs_spliced_tokens()
-    assigned, m_seg = _segmented_repack_inputs(turns_tok, mentions, budget,
-                                               seg_turns)
-
-    def run(key, turns_pdf: pd.DataFrame, mentions_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "turn_idx", "s1", "e1", "s2", "e2", "pred",
-                "score", "m1_ner", "m2_ner"]
-        if mentions_pdf.empty or turns_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        turns_pdf = turns_pdf.sort_values("turn_idx").reset_index(drop=True)
-        _, idx = _conv_index_from_rows(
-            turns_pdf[[c for c in ("conv_id", "turn_idx", "words", "subwords",
-                                   "sw_counts") if c in turns_pdf.columns]]
-        )
-        cid = key[0]
-        word_off = int(turns_pdf["word_off"].iloc[0])
-        tid_to_ord = {int(t): n for n, t in enumerate(turns_pdf["turn_idx"])}
-        rows = []
-        for tid, ments in _mentions_by_turn(mentions_pdf, word_off):
-            n = tid_to_ord[tid]
-            win = context_window(
-                idx, n, budget, truncate=True, materialize=need_tokens,
-                left_total=int(turns_pdf["cum_start"].iloc[n]),
-                right_total=int(turns_pdf["conv_total"].iloc[n]
-                                - turns_pdf["cum_end"].iloc[n]),
-            )
-            for s1, e1, s2, e2, pred, score, n1, n2 in _decode_turn(
-                idx, n, win, ments, cfg, transform, tensor_head, use_ner,
-                word_off=word_off,
-            ):
-                rows.append((cid, tid, s1, e1, s2, e2,
-                             REL_LABELS[pred], score, n1, n2))
-        return _triples_frame(rows, cols)
-
-    return (
-        assigned.groupBy("conv_id", "seg_id")
-        .cogroup(m_seg.groupBy("conv_id", "seg_id"))
-        .applyInPandas(run, schema=TRIPLES_RAW_SCHEMA)
-    )
-
-
 def _segmented_repack_inputs(turns_tok: DataFrame, mentions: DataFrame,
                              budget: int, seg_turns: int):
     """Segment-replicated turns + center-segment-keyed mentions — the

@@ -1,12 +1,25 @@
 """End-to-end pipeline driver: transcripts → … → triples (+ graph stages).
 
-Stage graph (each node a checkpoint table, SURVEY.md §7):
+Extraction runs one of two plans, picked from the config by
+``single_pass_eligible`` (each node a checkpoint table, SURVEY.md §7).
+
+Single-pass (surrogate head, whole conversations, default packing,
+bidirectional RE decode — DEFAULT_CONFIG):
+
+    transcripts ─▶ turns_tok ─▶ extract ─▶ (mentions, triples_raw)
+                                      ─▶ triples / mentions_refined
+
+General (every other config; tensor heads batch across conversations):
 
     transcripts ─▶ turns_tok ─▶ packed_ner ─▶ span_scores ─▶ mentions
          │                                                      │
          └──────────────────────▶ packed_re ◀───────────────────┘
                                       │
                      pair_scores ─▶ triples_raw ─▶ triples / mentions_refined
+
+packed_ner / packed_re use the segmented packers when ``segment_turns > 0``;
+the levitated-pair variant swaps packed_re/pair_scores for its own chain;
+``eval_unidirect`` decodes pair_scores without fusion.
 """
 
 from __future__ import annotations
@@ -24,8 +37,27 @@ from .rel import (
     refine_types,
     suppress_triples,
 )
-from .repack import repack_re
-from .spanpack import spanpack_ner
+from .repack import repack_re, repack_re_segmented
+from .spanpack import spanpack_ner, spanpack_ner_segmented
+
+
+def single_pass_eligible(cfg: PipelineConfig) -> bool:
+    """Whether run_extraction takes the single-pass plan
+    (extract_fused.extract_single_pass). That plan scores with the
+    surrogate head one whole conversation at a time and decodes RE
+    bidirectionally, so it excludes tensor heads and tensor assembly (the
+    general plan batches their packed groups across conversations),
+    ``segment_turns``, the packing-reorder knobs (they change only the
+    staged packing they exist to exercise) and the unidirect and
+    levitated-pair ablations."""
+    return (
+        cfg.model == "surrogate"
+        and not cfg.assemble_tensors
+        and cfg.segment_turns == 0
+        and not (cfg.shuffle or cfg.group_sort or cfg.group_edge)
+        and not cfg.eval_unidirect
+        and not cfg.levitated_pairs
+    )
 
 
 def run_extraction(
@@ -37,14 +69,17 @@ def run_extraction(
 ) -> dict[str, DataFrame]:
     """Run transcripts → triples. With a CheckpointStore each stage is
     materialized + resumable; without one the plan stays lazy end-to-end.
+    The plan follows from the config (single_pass_eligible); stages the
+    chosen plan does not run are None in the result.
 
     granularity: "fine" checkpoints every intermediate (best resume
     resolution, used by tests); "coarse" parquet-checkpoints only the
     north-rule-mandated stage boundaries (span-pack → packed_ner, NER →
-    mentions, RE → triples; link/canonicalize are in build_graph), pins
-    multi-consumer intermediates in memory, and leaves single-consumer
-    stages lazy — the production/bench configuration (round-1 VERDICT
-    item #3: every extra parquet barrier is serial driver floor).
+    mentions, RE → triples, or the single-pass extract table; link/
+    canonicalize are in build_graph), pins multi-consumer intermediates in
+    memory, and leaves single-consumer stages lazy — the production/bench
+    configuration (round-1 VERDICT item #3: every extra parquet barrier is
+    serial driver floor).
 
     Coarse materialization choices and why:
     - turns_tok (parquet): consumed by span-pack, RE repack and graph
@@ -62,9 +97,7 @@ def run_extraction(
                       "pair_scores", "extract"}
     coarse_mem = {"triples_raw"}
 
-    def ck(name: str, build, always: bool = False,
-           bucket_by: list[str] | None = None,
-           partition_by: list[str] | None = None):
+    def ck(name: str, build, bucket_by: list[str] | None = None):
         if store is None:
             return build()
         if fine:
@@ -73,145 +106,60 @@ def run_extraction(
             # bucketed stage boundaries only in the production (coarse)
             # profile: every conversation-keyed consumer then reads the
             # scan's own partitioning instead of re-shuffling the stage
-            return store.stage(name, build, bucket_by=bucket_by,
-                               partition_by=partition_by)
+            return store.stage(name, build, bucket_by=bucket_by)
         if name in coarse_mem:
             return build().localCheckpoint()
         return build()
 
     turns_tok = ck("turns_tok",
                    lambda: assemble(transcripts, cfg.tokenizer_family),
-                   always=True, bucket_by=["conv_id"])
-    # fused NER profile: windowing+enumeration+scoring+suppression in one
-    # conversation-local pass (ner.spanpack_decode_ner) — packed_ner never
-    # materializes. Applies only where the fused kernel is exactly
-    # equivalent AND profitable: surrogate head (tensor heads batch groups
-    # across conversations), unsegmented, no reorder knobs (their seeded
-    # draws are positional in the staged packing; equality holds anyway by
-    # the invariance property, but keep the gate conservative).
-    ner_fused = (
-        cfg.ner_decode == "fused"
-        and cfg.model == "surrogate"
-        and not cfg.assemble_tensors
-        and cfg.segment_turns == 0
-        and not (cfg.shuffle or cfg.group_sort or cfg.group_edge)
-    )
-    re_grouped = (cfg.re_decode == "grouped" and not cfg.eval_unidirect
-                  and not cfg.levitated_pairs)
-    single_pass = ner_fused and re_grouped
-    if single_pass:
-        # terminal fusion of the production profile: mentions AND triples
-        # from ONE pass over the (bucketed) corpus — each conversation's
-        # mentions feed its RE decode in-process, so extraction reads the
-        # token arrays exactly once and writes exactly one table
-        # (extract_fused.extract_single_pass; equality-tested against the
-        # staged chains in test_variants)
+                   bucket_by=["conv_id"])
+    packed_ner = span_scores = packed_re = pair_scores = None
+    if single_pass_eligible(cfg):
+        # mentions AND triples from ONE pass over the (bucketed) corpus —
+        # each conversation's mentions feed its RE decode in-process, so
+        # extraction reads the token arrays exactly once and writes exactly
+        # one table. The union table stays a plain parquet sink: measured
+        # both ways (VERDICT r3 item #8), partitionBy("kind") lost ~3 s e2e
+        # at 20k convs (dynamic-partition commit + partition discovery on
+        # every re-read outweigh pruning 2 values), and two sinks would
+        # need a second pass over the token arrays.
         from .extract_fused import extract_single_pass, split_extract
 
-        packed_ner = span_scores = None
-        # layout decision, MEASURED both ways (VERDICT r3 item #8): the
-        # union table stays a plain parquet sink. partitionBy("kind")
-        # looked better in isolation (filtered reads 1.25→0.68 s) but
-        # loses ~3 s e2e at 20k convs in matched-ambient A/B (36.7 vs
-        # 33.6 s; dynamic-partition commit + partition discovery on every
-        # downstream re-read outweigh the pruning win at 2 partition
-        # values). Two separate sinks are structurally out: one grouped
-        # map emits one schema, so a second sink means a second pass over
-        # the token arrays — the exact cost single-pass extraction
-        # exists to avoid. CheckpointStore keeps `partition_by` for
-        # read-dominated deployments.
-        ext = ck("extract", lambda: extract_single_pass(turns_tok, cfg),
-                 always=True)
+        ext = ck("extract", lambda: extract_single_pass(turns_tok, cfg))
         mentions, triples_raw = split_extract(ext)
-    elif ner_fused:
-        from .ner import spanpack_decode_ner
-
-        packed_ner = span_scores = None
-        # mentions inherits the bucketed scan's clustering (same hash, same
-        # count), so the bucketed write adds no exchange — and the RE
-        # cogroup downstream becomes exchange-free on BOTH sides
-        mentions = ck("mentions",
-                      lambda: spanpack_decode_ner(turns_tok, cfg),
-                      always=True, bucket_by=["conv_id"])
-    elif cfg.segment_turns > 0:
-        from .repack import repack_re_segmented
-        from .spanpack import spanpack_ner_segmented
-
-        packed_ner = ck(
-            "packed_ner",
-            lambda: spanpack_ner_segmented(turns_tok, cfg, cfg.segment_turns),
-            always=True,
-        )
     else:
-        packed_ner = ck("packed_ner", lambda: spanpack_ner(turns_tok, cfg),
-                        always=True)
-    if not ner_fused:
+        seg = cfg.segment_turns
+        packed_ner = ck("packed_ner", lambda: (
+            spanpack_ner_segmented(turns_tok, cfg, seg) if seg > 0
+            else spanpack_ner(turns_tok, cfg)))
         span_scores = ck("span_scores", lambda: infer_ner(packed_ner, cfg))
         mentions = ck("mentions", lambda: suppress_mentions(span_scores, cfg),
-                      always=True, bucket_by=["conv_id"])
-    if cfg.levitated_pairs:
-        # C4 all-pairs levitated variant (run_levitatedpair.py:282-322):
-        # forward-only decode, shared O6/O7 downstream; composes with
-        # segmented windowing (repack_levitated_segmented)
-        from .levpair import (
-            decode_levitated,
-            repack_levitated,
-            repack_levitated_segmented,
-        )
+                      bucket_by=["conv_id"])
+        if cfg.levitated_pairs:
+            # C4 all-pairs levitated variant (run_levitatedpair.py:282-322):
+            # forward-only decode, shared O6/O7 downstream
+            from .levpair import (
+                decode_levitated,
+                repack_levitated,
+                repack_levitated_segmented,
+            )
 
-        if cfg.segment_turns > 0:
-            packed_re = ck(
-                "packed_re",
-                lambda: repack_levitated_segmented(turns_tok, mentions, cfg,
-                                                   cfg.segment_turns),
-                always=True,
-            )
+            pack, pack_seg, score = (repack_levitated,
+                                     repack_levitated_segmented,
+                                     decode_levitated)
         else:
-            packed_re = ck("packed_re",
-                           lambda: repack_levitated(turns_tok, mentions, cfg),
-                           always=True)
-        pair_scores = ck("pair_scores", lambda: decode_levitated(packed_re, cfg))
-        decoded = pair_scores
-    elif single_pass:
-        packed_re = pair_scores = None   # triples_raw already split above
-    elif cfg.re_decode == "grouped" and not cfg.eval_unidirect:
-        # production profile: packing + scoring + fusion + suppression in
-        # one conversation-local cogroup — the scored-pair table never
-        # shuffles (repack.repack_decode_re; segment-local for unbounded
-        # conversations via repack_decode_re_segmented)
-        from .repack import repack_decode_re, repack_decode_re_segmented
-
-        packed_re = pair_scores = None
-        if cfg.segment_turns > 0:
-            triples_raw = ck(
-                "triples_raw",
-                lambda: repack_decode_re_segmented(turns_tok, mentions, cfg,
-                                                   cfg.segment_turns),
-                always=True,
-            )
+            pack, pack_seg, score = repack_re, repack_re_segmented, infer_pairs
+        packed_re = ck("packed_re", lambda: (
+            pack_seg(turns_tok, mentions, cfg, seg) if seg > 0
+            else pack(turns_tok, mentions, cfg)))
+        pair_scores = ck("pair_scores", lambda: score(packed_re, cfg))
+        if cfg.levitated_pairs:
+            decoded = pair_scores
+        elif cfg.eval_unidirect:
+            decoded = decode_unidirect(pair_scores, mentions)
         else:
-            triples_raw = ck(
-                "triples_raw", lambda: repack_decode_re(turns_tok, mentions, cfg),
-                always=True,
-            )
-    else:
-        if cfg.segment_turns > 0:
-            packed_re = ck(
-                "packed_re",
-                lambda: repack_re_segmented(turns_tok, mentions, cfg, cfg.segment_turns),
-                always=True,
-            )
-        else:
-            packed_re = ck("packed_re", lambda: repack_re(turns_tok, mentions, cfg),
-                           always=True)
-        pair_scores = ck("pair_scores", lambda: infer_pairs(packed_re, cfg))
-        decoded = (
-            decode_unidirect(pair_scores, mentions)
-            if cfg.eval_unidirect
-            else fuse_and_decode(pair_scores)
-        )
-    if not (cfg.re_decode == "grouped" and not cfg.eval_unidirect
-            and not cfg.levitated_pairs):
+            decoded = fuse_and_decode(pair_scores)
         triples_raw = ck("triples_raw", lambda: suppress_triples(decoded))
 
     # one refine_types build: the shared refined-type map is pinned lazily
@@ -223,8 +171,8 @@ def run_extraction(
             if store is not None else None
         ),
     )
-    triples = ck("triples", lambda: triples_df, always=True)
-    mentions_refined = ck("mentions_refined", lambda: refined_df, always=True)
+    triples = ck("triples", lambda: triples_df)
+    mentions_refined = ck("mentions_refined", lambda: refined_df)
     return {
         "turns_tok": turns_tok,
         "packed_ner": packed_ner,
@@ -284,7 +232,12 @@ def run_with_eval(
     out = run_full_pipeline(spark, transcripts, cfg, store, granularity)
 
     def build_metrics():
-        rows = ner_metrics(out["mentions"], out["span_scores"], gold_mentions)
+        span_scores = out["span_scores"]
+        if span_scores is None:
+            # the single-pass plan suppresses in-process and keeps no
+            # pre-suppression scores; ner_f1_overlap needs them
+            span_scores = infer_ner(spanpack_ner(out["turns_tok"], cfg), cfg)
+        rows = ner_metrics(out["mentions"], span_scores, gold_mentions)
         rows.update(re_metrics(out["triples"], gold_relations, gold_mentions))
         rows["n_triples"] = float(out["triples"].count())
         rows["n_mentions"] = float(out["mentions"].count())

